@@ -1,19 +1,31 @@
-"""Seeded input generators for the benchmark.
+"""Seeded benchmark inputs, built from the repository's reference data.
 
-Everything the engine reads in a run is written here, from the seed
-alone: the same seed gives byte-identical inputs. Three families:
+``data/`` holds verbatim copies of the repository's reference inputs:
 
-* ``surface_tables`` -- the ten TPC-H-ish tables the declared queries
-  read (region .. embeddings), at a chosen scale factor, with the same
-  schemas and value domains as the repository's test data.
-* ``corpus`` -- an N-replica document corpus for the curate -> prepare
-  chain and the topic index.  Every 4th token of a replica is salted
-  with the replica tag, so replicas stay near-duplicate but distinct;
-  replica 0 stays unsalted so decontamination finds real hits.  For
-  the topic corpus each document also gets a few terms from a Zipf
-  tail vocabulary, so document frequency runs from all docs down to 1.
-* ``topics`` -- a closed-loop topic stream of 1-4 terms per topic with
-  a fixed share of head-term topics, alternating LM-Dirichlet / BM25.
+* ``sf0.001/``, ``sf0.01/`` -- the synthetic test tables the declared
+  queries read (TESTDATA.md; the correctness oracle runs at sf0.01).
+  The surface workload reads these as they are.
+* ``wt2010-topics.queries-only`` -- the 50 TREC 2010 Web-track topics
+  of the repository's plain topic-file fixture (FIXTURES.md section 2).
+
+From those, and the seed alone, two generators write the corpus
+workload's inputs (the same seed gives byte-identical files):
+
+* ``corpus`` -- N replicas of the sf0.01 ``documents`` table for the
+  curate -> prepare chain and the topic index.  Every 4th token of a
+  replica is salted with the replica tag, so replicas stay
+  near-duplicate but distinct; replica 0 stays unsalted so
+  decontamination finds real hits.  Each document also gets
+  TAIL_TERMS_PER_DOC terms drawn by Zipf's law (rank-frequency
+  exponent 1) from a tail vocabulary, so document frequency runs from
+  the table's own words (df ~ every doc) down to 1.
+* ``topics`` -- topics shaped like the reference topics: a topic is a
+  reference topic with each distinct term replaced by a corpus term of
+  the same class.  A reference stopword (Lucene's English stop set)
+  becomes a head term (a table word, in at least half the documents);
+  any other term becomes a tail term drawn from the corpus's own tail
+  occurrences.  The number of terms per topic and the share of topics
+  with a head term are therefore the reference's.
 """
 import os
 
@@ -21,189 +33,67 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-WORDS = ("the a fast slow big small data table row column key value join "
-         "group order sort filter scan hash merge window batch stream "
-         "spark query part line customer agg vector").split()
-ADJ = "small red blue hot cold old new large".split()
-NOUN = "widget bolt gear anvil ring rod plate gizmo".split()
-LANGS = ["en", "de", "fr", "es", "zh"]
-LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PTYPES = ["ECONOMY", "STANDARD", "LARGE", "SMALL", "MEDIUM", "PROMO"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+BASE_DOCS = os.path.join(DATA, "sf0.01", "documents.parquet")
+REF_TOPICS = os.path.join(DATA, "wt2010-topics.queries-only")
 
-# Topic stream shape: share of topics that carry one head term (a
-# corpus-wide word, df ~ every doc), and the Zipf tail vocabulary.
-HEAD_SHARE = 0.25
+# Lucene StopAnalyzer.ENGLISH_STOP_WORDS_SET, the set the engine exposes
+# as graft.text.Uax29.luceneStopSet.
+STOPWORDS = frozenset(
+    "a an and are as at be but by for if in into is it no not of on or "
+    "such that the their then there these they this to was will with".split())
+
 TAIL_VOCAB = 20000
-TAIL_ZIPF_A = 1.3
 TAIL_TERMS_PER_DOC = 3
 
 
 def _write(table, path, files=1):
-    """Write `table` as `files` parquet part files under `path` (a
-    directory) or as one file when `path` ends in .parquet."""
-    if path.endswith(".parquet"):
-        pq.write_table(table, path, compression="snappy")
-        return
+    """Write `table` as `files` parquet part files under directory `path`."""
     os.makedirs(path, exist_ok=True)
-    n = table.num_rows
-    step = -(-n // files)
+    step = -(-table.num_rows // files)
     for i in range(files):
-        part = table.slice(i * step, step)
-        pq.write_table(part, f"{path}/part-{i:05d}.parquet",
-                       compression="snappy")
+        pq.write_table(table.slice(i * step, step),
+                       f"{path}/part-{i:05d}.parquet", compression="snappy")
 
 
-def _texts(rng, n):
-    """n documents of 10-99 words over WORDS; ~5% repeat an earlier
-    original (never another copy) with ' dup' appended: the
-    near-duplicate family, one level deep."""
-    lens = rng.integers(10, 100, n)
-    words = rng.integers(0, len(WORDS), int(lens.sum()))
-    out, pos = [], 0
-    vocab = np.array(WORDS, dtype=object)
-    for i, k in enumerate(lens):
-        out.append(" ".join(vocab[words[pos:pos + k]]))
-        pos += k
-    is_dup = rng.random(n) < 0.05
-    is_dup[0] = False
-    originals = np.nonzero(~is_dup)[0]
-    for i in np.nonzero(is_dup)[0]:
-        below = originals[originals < i]
-        out[i] = out[int(below[rng.integers(0, len(below))])] + " dup"
-    return out
+def base_texts():
+    return pq.read_table(BASE_DOCS, columns=["text"]).column("text").to_pylist()
 
 
-def documents(rng, n):
-    text = _texts(rng, n)
-    ids = np.arange(n, dtype=np.int64)
-    return pa.table({
-        "doc_id": ids,
-        "text": text,
-        "lang": rng.choice(LANGS, n, p=LANG_P),
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": np.array([len(t) for t in text], dtype=np.int64),
-    })
-
-
-def _ts(rng, n, start, days):
-    base = np.datetime64(start, "us")
-    span = np.int64(days * 86400 * 10**6)
-    return base + rng.integers(0, span, n).astype("timedelta64[us]")
-
-
-def surface_tables(out_dir, seed, sf):
-    """The ten tables the declared queries read, at scale factor sf."""
-    rng = np.random.default_rng([seed, 1])
-    os.makedirs(out_dir, exist_ok=True)
-    n_cust, n_supp = int(150000 * sf), max(10, int(10000 * sf))
-    n_part, n_ord = int(200000 * sf), int(1500000 * sf)
-    n_line, n_ev = 4 * n_ord, int(1000000 * sf)
-    n_users = max(15, int(15000 * sf))
-    n_docs, n_emb = max(500, int(50000 * sf)), max(500, int(20000 * sf))
-    i32, i64 = np.int32, np.int64
-
-    def money(lo, hi, n):
-        return np.round(rng.uniform(lo, hi, n), 2)
-
-    t = {}
-    t["region"] = pa.table({
-        "r_regionkey": np.arange(5, dtype=i32),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]})
-    t["nation"] = pa.table({
-        "n_nationkey": np.arange(25, dtype=i32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": (np.arange(25) % 5).astype(i32)})
-    t["customer"] = pa.table({
-        "c_custkey": np.arange(n_cust, dtype=i64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype(i32),
-        "c_acctbal": money(-999.99, 9999.99, n_cust),
-        "c_mktsegment": rng.choice(SEGMENTS, n_cust)})
-    t["supplier"] = pa.table({
-        "s_suppkey": np.arange(n_supp, dtype=i64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype(i32),
-        "s_acctbal": money(-999.99, 9999.99, n_supp)})
-    t["part"] = pa.table({
-        "p_partkey": np.arange(n_part, dtype=i64),
-        "p_name": [f"{ADJ[a]} {NOUN[b]}" for a, b in
-                   zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": rng.choice(PTYPES, n_part),
-        "p_size": rng.integers(1, 51, n_part).astype(i32),
-        "p_retailprice": np.round(900 + (np.arange(n_part) % 1000) * 0.1, 1)})
-    t["orders"] = pa.table({
-        "o_orderkey": np.arange(n_ord, dtype=i64),
-        "o_custkey": rng.integers(0, n_cust, n_ord).astype(i64),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-        "o_totalprice": money(1000, 500000, n_ord),
-        "o_orderdate": _ts(rng, n_ord, "1995-01-01", 2404)
-        .astype("datetime64[D]").astype("datetime64[us]"),
-        "o_orderpriority": rng.choice(PRIORITIES, n_ord)})
-    t["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, n_ord, n_line).astype(i64),
-        "l_partkey": rng.integers(0, n_part, n_line).astype(i64),
-        "l_suppkey": rng.integers(0, n_supp, n_line).astype(i64),
-        "l_linenumber": rng.integers(1, 8, n_line).astype(i32),
-        "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
-        "l_extendedprice": money(900, 105000, n_line),
-        "l_discount": rng.integers(0, 11, n_line) / 100.0,
-        "l_tax": rng.integers(0, 9, n_line) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], n_line),
-        "l_linestatus": rng.choice(["O", "F"], n_line),
-        "l_shipdate": _ts(rng, n_line, "1995-01-02", 2498)
-        .astype("datetime64[D]").astype("datetime64[us]")})
-    ts = np.sort(_ts(rng, n_ev, "2024-01-01", 30))
-    t["events"] = pa.table({
-        "event_id": np.arange(n_ev, dtype=i64),
-        "ts": ts,
-        "user_id": rng.integers(0, n_users, n_ev).astype(i64),
-        "event_type": rng.choice(EVENT_TYPES, n_ev),
-        "value": np.maximum(0.01, np.round(rng.exponential(50, n_ev), 2)),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]})
-    t["documents"] = documents(rng, n_docs)
-    labels = rng.integers(0, 10, n_emb)
-    centers = rng.normal(0, 1, (10, 64))
-    vec = centers[labels] + rng.normal(0, 0.8, (n_emb, 64))
-    vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
-    t["embeddings"] = pa.table({
-        "vec_id": np.arange(n_emb, dtype=i64),
-        "embedding": pa.array(list(vec), type=pa.list_(pa.float32())),
-        "label": labels.astype(i32)})
-    for name, tab in t.items():
-        _write(tab, f"{out_dir}/{name}.parquet")
-    return {k: v.num_rows for k, v in t.items()}
+def head_terms(texts):
+    """Words of the base table found in at least half its documents."""
+    df = {}
+    for t in texts:
+        for w in set(t.split()):
+            df[w] = df.get(w, 0) + 1
+    return sorted(w for w, n in df.items() if 2 * n >= len(texts))
 
 
 def _tail_terms(rng, n):
-    """n draws from the Zipf tail vocabulary, as 'zq<rank>' terms."""
-    r = rng.zipf(TAIL_ZIPF_A, n)
-    r = np.where(r > TAIL_VOCAB, rng.integers(1, TAIL_VOCAB + 1, n), r)
-    return np.char.add("zq", r.astype(str))
+    """n draws of 'zq<rank>' with P(rank) proportional to 1 / rank."""
+    p = 1.0 / np.arange(1, TAIL_VOCAB + 1)
+    ranks = rng.choice(TAIL_VOCAB, n, p=p / p.sum()) + 1
+    return np.char.add("zq", ranks.astype(str))
 
 
-def corpus(out_dir, seed, base_docs, replicas, tail_terms=False, files=8):
-    """N-replica corpus (doc_id, text) plus the decontamination
-    benchmark set (the first 50 base docs) under out_dir/{docs,bench}."""
+def corpus(out_dir, seed, replicas, files=8):
+    """`replicas` copies of the base documents (doc_id, text) plus the
+    decontamination benchmark set (the first 50 base docs) under
+    out_dir/{docs,bench}."""
     rng = np.random.default_rng([seed, 2])
-    base = _texts(rng, base_docs)
-    base_tok = [t.split(" ") for t in base]
+    base = base_texts()
     ids, texts = [], []
     for k in range(replicas):
         tag = f"k{k}"
-        for i, toks in enumerate(base_tok):
+        for i, text in enumerate(base):
+            toks = text.split(" ")
             if k > 0:
-                toks = [w + tag if j % 4 == 0 else w
-                        for j, w in enumerate(toks)]
+                toks = [w + tag if j % 4 == 0 else w for j, w in enumerate(toks)]
             ids.append(k * 10_000_000 + i)
             texts.append(" ".join(toks))
-    if tail_terms:
-        extra = _tail_terms(rng, len(texts) * TAIL_TERMS_PER_DOC)
-        extra = extra.reshape(len(texts), TAIL_TERMS_PER_DOC)
-        texts = [t + " " + " ".join(e) for t, e in zip(texts, extra)]
+    extra = _tail_terms(rng, len(texts) * TAIL_TERMS_PER_DOC)
+    extra = extra.reshape(len(texts), TAIL_TERMS_PER_DOC)
+    texts = [t + " " + " ".join(e) for t, e in zip(texts, extra)]
     # a seeded shuffle, so replicas interleave across the part files
     order = rng.permutation(len(ids))
     tab = pa.table({"doc_id": np.array(ids, dtype=np.int64)[order],
@@ -211,38 +101,82 @@ def corpus(out_dir, seed, base_docs, replicas, tail_terms=False, files=8):
     _write(tab, f"{out_dir}/docs", files)
     bench = pa.table({"doc_id": np.arange(50, dtype=np.int64),
                       "text": base[:50]})
-    _write(bench, f"{out_dir}/bench", 1)
+    _write(bench, f"{out_dir}/bench")
     return {"docs": len(ids), "bytes": int(sum(len(t) for t in texts))}
 
 
-def topics(path, seed, n, corpus_dir, stream=0):
-    """n topics (qid, model, terms) as TSV.  Terms come from the
-    corpus's own vocabulary so every topic matches something: head
-    terms from WORDS, mid/tail terms sampled from the tail terms the
-    corpus actually holds, weighted towards the selective end.  Streams
-    with different `stream` numbers are disjoint draws (warm-up vs
-    measured)."""
-    rng = np.random.default_rng([seed, 3, stream])
+def reference_topics():
+    """[(qid, distinct terms in order)] of the reference topic file."""
+    out = []
+    with open(REF_TOPICS) as f:
+        for line in f:
+            qid, _, text = line.strip().partition(":")
+            if qid:
+                out.append((qid, list(dict.fromkeys(text.split()))))
+    return out
+
+
+def is_head(terms):
+    return any(t in STOPWORDS for t in terms)
+
+
+def _split(n, groups):
+    """n split over groups in proportion to their sizes, largest
+    remainder first (ties to the earlier group)."""
+    total = sum(len(g) for g in groups)
+    exact = [n * len(g) / total for g in groups]
+    quota = [int(e) for e in exact]
+    by_rest = sorted(range(len(groups)), key=lambda i: quota[i] - exact[i])
+    for i in by_rest[:n - sum(quota)]:
+        quota[i] += 1
+    return quota
+
+
+def pick_topics(seed, n, n_warm):
+    """Two disjoint seeded draws of reference topics: `n` measured ones,
+    a sample stratified by class (head / tail) and then by term count,
+    so every seed measures the reference's mix; and `n_warm` warm-up
+    ones from the rest."""
+    rng = np.random.default_rng([seed, 3])
+    ref = reference_topics()
+    measured = []
+    classes = [[t for t in ref if is_head(t[1])], [t for t in ref if not is_head(t[1])]]
+    for cls, k in zip(classes, _split(n, classes)):
+        cells = [[t for t in cls if len(t[1]) == m]
+                 for m in sorted({len(t[1]) for t in cls})]
+        for cell, j in zip(cells, _split(k, cells)):
+            measured += [cell[i] for i in rng.choice(len(cell), j, replace=False)]
+    rest = [t for t in ref if t not in measured]
+    warm = [rest[i] for i in rng.choice(len(rest), n_warm, replace=False)]
+    return [measured[i] for i in rng.permutation(n)], warm
+
+
+def topics(path, seed, ref, corpus_dir, stream):
+    """Write the reference topics `ref` as corpus topics to `path`, one
+    TSV line each: qid, model (LM-Dirichlet and BM25 alternating), class
+    (head / tail), terms."""
+    rng = np.random.default_rng([seed, 4, stream])
+    heads = head_terms(base_texts())
     docs = pq.read_table(f"{corpus_dir}/docs", columns=["text"])
-    seen = {}
-    for t in docs.column("text").to_pylist():
-        for w in t.rsplit(" ", TAIL_TERMS_PER_DOC)[1:]:
-            seen[w] = seen.get(w, 0) + 1
-    tail = sorted(seen, key=lambda w: (seen[w], w))
+    tail = [w for t in docs.column("text").to_pylist()
+            for w in t.rsplit(" ", TAIL_TERMS_PER_DOC)[1:]]
     lines = []
-    for q in range(n):
-        k = int(rng.integers(1, 5))
+    for q, (qid, ref_terms) in enumerate(ref):
         terms = []
-        if rng.random() < HEAD_SHARE:
-            terms.append(WORDS[int(rng.integers(0, len(WORDS)))])
-        while len(terms) < k:
-            # squaring the uniform draw leans towards rare terms
-            w = tail[int(len(tail) * rng.random() ** 2)]
-            if w not in terms:
-                terms.append(w)
+        for r in ref_terms:
+            # a stopword that is itself a table word ('the', 'a') stays
+            if r in STOPWORDS and r in heads and r not in terms:
+                terms.append(r)
+                continue
+            pool = heads if r in STOPWORDS else tail
+            w = pool[int(rng.integers(len(pool)))]
+            while w in terms:
+                w = pool[int(rng.integers(len(pool)))]
+            terms.append(w)
         model = "lmdir" if q % 2 == 0 else "bm25"
-        lines.append(f"q{q}\t{model}\t{' '.join(terms)}")
+        cls = "head" if is_head(ref_terms) else "tail"
+        lines.append(f"wt{qid}\t{model}\t{cls}\t{' '.join(terms)}")
     with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
-    return {"topics": n, "head": sum(1 for l in lines
-                                     if l.split("\t")[2].split(" ")[0] in WORDS)}
+    return {"topics": len(lines), "head": sum(is_head(t) for _, t in ref),
+            "reference_qids": [qid for qid, _ in ref]}

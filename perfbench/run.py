@@ -6,23 +6,28 @@
 Run from the repository root.  The first run in a checkout builds the
 engine and the harness from source (sbt, in ``perfbench/``); later runs
 reuse the build while the sources are unchanged.  Inputs are generated
-from ``--seed`` (``gen.py``); the engine receives only the generated
-files, and is reached only through its public entry points.
+from ``--seed`` and the repository's reference data (``gen.py``); the
+engine receives only the input files, and is reached only through its
+public entry points.  Each run does a fixed amount of work, the same for
+every seed and every engine revision.  ``--seconds`` is accepted for the
+runner's interface and not used: a time-bounded loop would let a faster
+engine do more work per run, and that would read as another workload.
 
 Workloads (sizes in WORKLOADS below):
 
 * ``surface`` -- every STRIDE-th declared query of each registry in
   declared order, full output via ``Bench.materialize``: a warm-up pass
-  on a small sibling SF, then PASSES measured passes, each over its own
-  seeded SF.  Checked: each query's row count equals the DuckDB oracle's
-  on the same tables.
+  on the repository's sf0.001 test tables, then PASSES measured passes,
+  each over its own copy of the sf0.01 test tables.  Checked: each
+  query's row count equals the DuckDB oracle's on the same tables.
 * ``corpus`` -- batch side, then serving side, over one salted
   N-replica corpus: ``Jobs.curateCorpus(gopher = true)`` then
   ``Jobs.prepareTrainingData`` on its output (cold, as the Jobs CLI runs
   once per JVM); ``Index.writeInverted`` (sharded postings); a warm
-  closed-loop topic session through ``Index.scoreFromInverted`` (k = 1000,
-  LM-Dirichlet and BM25 alternating, a fixed share of head-term topics);
-  the same topics in one sequential-scan pass (``Retrieval.scoreFor``).
+  closed-loop session of TOPICS topics through ``Index.scoreFromInverted``
+  (k = 1000, LM-Dirichlet and BM25 alternating, shaped like the
+  repository's WT2010 reference topics); the same topics in one
+  sequential-scan pass (``Retrieval.scoreFor``).
   Checked: both funnels non-increasing, examples > 0, shard and example
   counts match the report; each topic's index top-k equals its scan
   top-k.
@@ -32,7 +37,10 @@ workloads; END_TO_END says what each means where.  A failed or wrong op
 counts in ``failed`` and as a miss in the latency percentiles.  With
 ``--trace 1`` the run registers a Spark listener and records spans around
 every engine call, and prints the per-layer metrics (per_layer_names)
-plus the tracing overhead against the untraced runs of this checkout.
+plus the tracing overhead: traced minus untraced, against untraced runs
+of the same workload and sources in this checkout (the one with the same
+seed, else the median over the seeds on record, else one made in the
+same invocation with the same seed).
 
 Before the result line the run prints one ``{"record": ...}`` line with
 the host context (nproc, heap, steal/sys CPU of the measured windows,
@@ -62,15 +70,14 @@ BUILD = os.path.join(ROOT, ".bench_build")
 # Sizes: chosen so one run of each workload takes about a minute on a
 # 4-core host.
 WORKLOADS = {
-    "surface": {"stride": 10, "passes": 2, "sf": 0.002, "warm_sf": 0.001},
-    "corpus": {"base_docs": 300, "replicas": 8, "shards": 8, "topics": 200,
-               "min_topics": 16, "warm_topics": 12, "k": 1000},
+    "surface": {"stride": 10, "passes": 3, "sf": "sf0.01", "warm_sf": "sf0.001"},
+    "corpus": {"replicas": 5, "shards": 8, "topics": 20, "warm_topics": 10,
+               "k": 1000},
 }
-GEN_REPEATS = 3
 
 END_TO_END = {
-    "setup_s": ("s", "input generation (median of 3) + session start + warm-up"),
-    "batch_s": ("s", "surface: surface_total_s (the pass); "
+    "setup_s": ("s", "input generation + session start + warm-up"),
+    "batch_s": ("s", "surface: surface_total_s (the median pass); "
                      "corpus: chain_s + index_build_s + scan_batch_s"),
     "op_p50_ms": ("ms", "median latency of a query (surface) / topic (corpus)"),
 }
@@ -253,37 +260,32 @@ def generate(workload, seed, d):
     """Write the workload's inputs under d; returns their sizes."""
     w = WORKLOADS[workload]
     if workload == "surface":
-        sizes = {f"sf{i}": gen.surface_tables(f"{d}/sf{i}", seed + i, w["sf"])
-                 for i in range(w["passes"])}
-        sizes["warm"] = gen.surface_tables(f"{d}/warm", seed + 7919, w["warm_sf"])
-        return sizes
-    return {"corpus": gen.corpus(f"{d}/corpus", seed, w["base_docs"],
-                                 w["replicas"], tail_terms=True),
-            "topics": gen.topics(f"{d}/topics.tsv", seed, w["topics"],
-                                 f"{d}/corpus"),
-            "warm_topics": gen.topics(f"{d}/warm_topics.tsv", seed,
-                                      w["warm_topics"], f"{d}/corpus",
-                                      stream=1)}
+        # the test tables as they are, one copy per pass
+        dirs = {f"sf{i}": w["sf"] for i in range(w["passes"])}
+        dirs["warm"] = w["warm_sf"]
+        for name, sf in dirs.items():
+            shutil.copytree(os.path.join(gen.DATA, sf), f"{d}/{name}")
+        return dirs
+    measured, warm = gen.pick_topics(seed, w["topics"], w["warm_topics"])
+    return {"corpus": gen.corpus(f"{d}/corpus", seed, w["replicas"]),
+            "topics": gen.topics(f"{d}/topics.tsv", seed, measured,
+                                 f"{d}/corpus", stream=0),
+            "warm_topics": gen.topics(f"{d}/warm_topics.tsv", seed, warm,
+                                      f"{d}/corpus", stream=1)}
 
 
 # ---- one harness run --------------------------------------------------
 
-def run_harness(cp, workload, seed, seconds, trace, wdir):
+def run_harness(cp, workload, seed, trace, wdir):
     """Generate inputs and run the harness JVM once; returns its record."""
     shutil.rmtree(wdir, ignore_errors=True)
-    gen_s, sizes = [], None
-    for i in range(GEN_REPEATS):
-        d = f"{wdir}/in" if i == GEN_REPEATS - 1 else f"{wdir}/gen{i}"
-        t0 = time.perf_counter()
-        sizes = generate(workload, seed, d)
-        gen_s.append(time.perf_counter() - t0)
-        if d != f"{wdir}/in":
-            shutil.rmtree(d)
+    t0 = time.perf_counter()
+    sizes = generate(workload, seed, f"{wdir}/in")
+    gen_s = time.perf_counter() - t0
     tmp = f"{wdir}/tmp"
     os.makedirs(tmp)
     opts = {"workload": workload, "in": f"{wdir}/in", "work": f"{wdir}/work",
-            "out": f"{wdir}/record.json", "trace": str(trace),
-            "seconds": str(seconds), "seed": str(seed),
+            "out": f"{wdir}/record.json", "trace": str(trace), "seed": str(seed),
             "cpus": str(len(os.sched_getaffinity(0)))}
     opts.update({k: str(v) for k, v in WORKLOADS[workload].items()})
     heap = heap_size()
@@ -358,7 +360,7 @@ def end_to_end(workload, rec):
     lat = [o["ms"] for o in loop]
     miss = win["wall_s"] * 1e3  # a failed op: longer than any single op
     p50, tail, level, n = stats.latency_summary(lat, [o["ok"] for o in loop], miss)
-    setup_s = statistics.median(rec["gen_s"]) + sum(rec["setup"].values())
+    setup_s = rec["gen_s"] + sum(rec["setup"].values())
     if workload == "surface":
         # per query, the median of its passes; the batch is the median pass
         by_q = {}
@@ -372,15 +374,18 @@ def end_to_end(workload, rec):
             passes[o["pass"]] = passes.get(o["pass"], 0.0) + o["ms"] / 1e3
         batch = statistics.median(passes.values())
         named = {"surface_total_s": batch, "query_p50_s": p50 / 1e3,
-                 f"query_p{level:g}_s": tail / 1e3,
                  "pass_totals_s": sorted(passes.values())}
+        tail_name = f"query_p{level:g}_s"
+        tail /= 1e3
     else:
         chain = next(o["ms"] for o in ops if o["kind"] == "chain") / 1e3
         batch = chain + rec["index_build_s"] + rec["scan_batch_s"]
         named = {"chain_s": chain, "index_build_s": rec["index_build_s"],
                  "scan_batch_s": rec["scan_batch_s"], "topic_p50_ms": p50,
-                 f"topic_p{level:g}_ms": tail,
                  "topics_per_s": n / (sum(lat) / 1e3)}
+        tail_name = f"topic_p{level:g}_ms"
+    if level != 50:  # the tail rule's rung; at 50 it is the p50 itself
+        named[tail_name] = tail
     metrics = {"setup_s": setup_s, "batch_s": batch, "op_p50_ms": p50}
     named.update(failed_frac=sum(not o["ok"] for o in ops) / len(ops),
                  ops_n=n, tail_percentile=level,
@@ -476,9 +481,8 @@ def ir_metrics(rec, spans, stages_under, by_span):
     ops = [o for o in topics if o["ok"]]
     if not ops:
         return {}
-    head = set(gen.WORDS)
-    heads = [o["ms"] for o in ops if head & set(o["terms"])]
-    tails = [o["ms"] for o in ops if not head & set(o["terms"])]
+    heads = [o["ms"] for o in ops if o["class"] == "head"]
+    tails = [o["ms"] for o in ops if o["class"] == "tail"]
     post = rec["postings"]
     return {
         "ir.build.cpu_s": build["cpu_s"],
@@ -556,27 +560,39 @@ def span_table(rec):
 
 # ---- entry point ------------------------------------------------------
 
-def untraced_baseline(cp, args, wdir):
-    """Median end-to-end values of this checkout's untraced runs of the
-    workload; with none on record, one untraced run with the same seed."""
-    path = os.path.join(BUILD, "runs", "untraced.jsonl")
+UNTRACED = os.path.join(BUILD, "runs", "untraced.jsonl")
+
+
+def untraced_baseline(cp, key, wdir):
+    """(end-to-end values, basis) of untraced runs of the same workload
+    and sources in this checkout: the latest with the same seed, else the
+    median over the other seeds on record, else one run now with this
+    seed."""
     rows = []
-    if os.path.isfile(path):
-        with open(path) as f:
-            rows = [json.loads(l) for l in f if l.strip()]
-    rows = [r["metrics"] for r in rows if r["workload"] == args.workload]
-    if not rows:
-        rec = run_harness(cp, args.workload, args.seed, args.seconds, 0, wdir)
-        finish(rec, args.workload, wdir)
-        rows = [end_to_end(args.workload, rec)[0]]
-        record_untraced(args.workload, rows[0])
-    return {k: statistics.median(r[k] for r in rows) for k in END_TO_END}
+    if os.path.isfile(UNTRACED):
+        with open(UNTRACED) as f:
+            # rows written by an older benchmark carry no key
+            rows = [r for r in map(json.loads, f) if "key" in r]
+    same = [r for r in rows if r["key"] == key]
+    if same:
+        return same[-1]["metrics"], {"seeds": [key["seed"]]}
+    rows = [r for r in rows if r["key"]["workload"] == key["workload"] and
+            r["key"]["digest"] == key["digest"]]
+    if rows:
+        return ({k: statistics.median(r["metrics"][k] for r in rows)
+                 for k in END_TO_END}, {"seeds": [r["key"]["seed"] for r in rows]})
+    log("no untraced run of these sources on record: running one")
+    rec = run_harness(cp, key["workload"], key["seed"], 0, wdir)
+    finish(rec, key["workload"], wdir)
+    metrics = end_to_end(key["workload"], rec)[0]
+    record_untraced(key, metrics)
+    return metrics, {"seeds": [key["seed"]], "paired": True}
 
 
-def record_untraced(workload, metrics):
-    os.makedirs(os.path.join(BUILD, "runs"), exist_ok=True)
-    with open(os.path.join(BUILD, "runs", "untraced.jsonl"), "a") as f:
-        f.write(json.dumps({"workload": workload, "metrics": metrics}) + "\n")
+def record_untraced(key, metrics):
+    os.makedirs(os.path.dirname(UNTRACED), exist_ok=True)
+    with open(UNTRACED, "a") as f:
+        f.write(json.dumps({"key": key, "metrics": metrics}) + "\n")
 
 
 def finish(rec, workload, wdir):
@@ -596,10 +612,11 @@ def main(argv=None):
     signal.signal(signal.SIGINT, _on_signal)
     try:
         cp = classpath()
+        digest = source_digest()
+        key = {"workload": args.workload, "seed": args.seed, "digest": digest}
         wdir = os.path.join(BUILD, "work", args.workload)
-        baseline = untraced_baseline(cp, args, wdir) if args.trace else None
-        rec = run_harness(cp, args.workload, args.seed, args.seconds,
-                          args.trace, wdir)
+        baseline, basis = untraced_baseline(cp, key, wdir) if args.trace else (None, None)
+        rec = run_harness(cp, args.workload, args.seed, args.trace, wdir)
         finish(rec, args.workload, wdir)
     except (BenchError, subprocess.SubprocessError, OSError) as e:
         log(f"error: {e}")
@@ -609,14 +626,14 @@ def main(argv=None):
         values = per_layer(args.workload, rec, e2e, baseline)
         units = dict(per_layer_names())
     else:
-        record_untraced(args.workload, e2e)
+        record_untraced(key, e2e)
         values, units = e2e, {k: u for k, (u, _) in END_TO_END.items()}
     failed = [o for o in rec["ops"] if not o["ok"]]
     win = rec["window"]
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "host": dict(rec["host"], heap=rec["heap"], revision=revision(),
-                     source_digest=source_digest(),
+                     source_digest=digest,
                      **{f"host.{k}": win[k] for k in ("steal_s", "sys_s")}),
         "sizes": rec["sizes"], "setup": dict(rec["setup"], gen_s=rec["gen_s"]),
         "window_s": win["wall_s"], "named": named,
@@ -628,6 +645,7 @@ def main(argv=None):
     if args.trace:
         record["overhead_vs_untraced"] = {k: {"traced": e2e[k], "untraced": baseline[k]}
                                           for k in e2e}
+        record["untraced_basis"] = basis
     print(json.dumps({"record": record}))
     print(json.dumps({
         "correct": not failed, "attempted": len(rec["ops"]),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *
   * {{{
   * perfbench.Main --workload <name> --in <input dir> --work <scratch dir>
-  *   --out <record.json> --trace 0|1 --seconds <s> --seed <n> --cpus <n>
+  *   --out <record.json> --trace 0|1 --seed <n> --cpus <n>
   *   [workload options]
   * }}}
   *
@@ -74,7 +74,6 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
 
   def in(p: String): String = s"${opt("in")}/$p"
   def work(p: String): String = s"${opt("work")}/$p"
-  def seconds: Double = opt("seconds").toDouble
   def int(k: String): Int = opt(k).toInt
 
   def setup(part: String, s: Double): Unit = setupParts(part) = s

@@ -38,8 +38,9 @@ object Workloads {
   }
 
   /** The declared queries: a warm-up pass on a small sibling SF, then
-    * `passes` measured passes, each over its own seeded SF (a fresh
-    * directory, so no pass reads another's cached table handles). */
+    * `passes` measured passes, each over its own copy of the measured SF
+    * (a fresh directory, so no pass reads another's cached table
+    * handles). */
   def surface(c: Ctx): Unit = {
     val spark = c.spark
     val decls = surfaceDecls(c.int("stride"))
@@ -180,12 +181,12 @@ object Workloads {
 
   // ---- topic retrieval over the sharded postings index ------------------
 
-  final case class Topic(qid: String, model: String, terms: Seq[String])
+  final case class Topic(qid: String, model: String, cls: String, terms: Seq[String])
 
   private def readTopics(path: String): Seq[Topic] =
     scala.io.Source.fromFile(path, "UTF-8").getLines().filter(_.nonEmpty)
       .map(_.split("\t") match {
-        case Array(q, m, ts) => Topic(q, m, ts.split(" ").toSeq)
+        case Array(q, m, cls, ts) => Topic(q, m, cls, ts.split(" ").toSeq)
       }).toSeq
 
   private def exprs(model: String): (String, String) = model match {
@@ -243,14 +244,9 @@ object Workloads {
     c.settle()
     c.beginWindow()
     val results = mutable.LinkedHashMap.empty[String, Ranked]
-    // closed loop: the next topic goes out when the previous collect()
-    // returns, until the window's time is up (at least min_topics)
-    val deadline = System.nanoTime() + (c.seconds * 1e9).toLong
-    val ops = mutable.ArrayBuffer.empty[Map[String, Any]]
-    val stream = topics.iterator
-    while (stream.hasNext &&
-        (ops.size < c.int("min_topics") || System.nanoTime() < deadline)) {
-      val t = stream.next()
+    // closed loop over the whole fixed topic set: the next topic goes out
+    // when the previous collect() returns
+    val ops = topics.map { t =>
       c.tracer.newTrace()
       val read0 = if (c.tracer.enabled) Counters.localFsReadBytes else 0L
       val t0 = System.nanoTime()
@@ -262,15 +258,14 @@ object Workloads {
           "explode_rows" -> Explode.rows(df.queryExecution.executedPlan))
       }.getOrElse(Map.empty)
       res.foreach { case (_, rows, _, _) => results(t.qid) = ranked(rows) }
-      ops += Map("name" -> t.qid, "kind" -> "topic", "model" -> t.model, "terms" -> t.terms, "ms" -> dt,
-        "ok" -> res.isRight, "error" -> res.left.toOption,
+      Map("name" -> t.qid, "kind" -> "topic", "model" -> t.model, "class" -> t.cls,
+        "terms" -> t.terms, "ms" -> dt, "ok" -> res.isRight, "error" -> res.left.toOption,
         "rows" -> res.map(_._2.length).getOrElse(0),
         "call_ms" -> res.toOption.map(_._3), "exec_ms" -> res.toOption.map(_._4)) ++ extra
     }
-    val sent = topics.take(ops.size)
     // the MIREX pass: the same topic set, one sequential scan per model
     val t1 = System.nanoTime()
-    val scan = sent.groupBy(_.model).toSeq.sortBy(_._1).flatMap { case (m, ts) =>
+    val scan = topics.groupBy(_.model).toSeq.sortBy(_._1).flatMap { case (m, ts) =>
       val (part, fin) = exprs(m)
       c.tracer.span("ir.scan")(Retrieval.scoreFor(docs, qdf(ts), part, fin,
         conjunctive = false, k).collect())
@@ -285,7 +280,7 @@ object Workloads {
       c.rec("postings") = Map("rows" -> st.getLong(0), "max_postings" -> st.getInt(1),
         "mb" -> dirBytes(s"$idx/postings") / 1048576.0)
     }
-    ops.toSeq.map { o =>
+    ops.map { o =>
       val q = o("name").toString
       val same = results.get(q).exists(r => r == byQid.getOrElse(q, Set.empty))
       if (o("ok") == true && !same) o ++ Map("ok" -> false, "error" -> "index top-k != scan top-k")
