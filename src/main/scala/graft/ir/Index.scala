@@ -3,6 +3,8 @@ package graft.ir
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.util.Try
 
 /** Materialized doc-vector index (SURVEY §3.3: the HBase stack
   * `IndexTrecToHBase → CollectionStatsHBase → RunQueryHBase` becomes
@@ -49,16 +51,27 @@ object Index {
       .groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
 
-  /** Inverted postings layout: one row per term carrying its full
-    * postings list (doc_id-sorted) plus precomputed df/cf, with doc
-    * lengths in a small side table. This is the SELECTIVE-query scale
-    * path the doc-vector layout can't offer: a query touches only its
-    * own terms' rows, and because the postings file is term-sorted the
-    * literal `term IN (...)` predicate prunes parquet row groups at the
-    * scan (`PushedFilters`, asserted in IndexSpec) — the Spark analog
-    * of an HBase point-Get per term (SURVEY §3.3), without the RPC.
-    */
-  /** The postings relation from a (doc_id, term, tf) frame.
+  private val IxSlices = 4096L
+
+  /** Inverted postings layout, one parquet table under `path/postings`:
+    *
+    *   (term, [shard,] postings: array<struct<doc_id, tf, dl>>,
+    *    df, cf, n_docs, n_tokens)
+    *
+    * Each posting carries its document's length `dl`; each row carries
+    * the TERM-level `df`/`cf` and the COLLECTION-level `n_docs`/
+    * `n_tokens`. A row is therefore everything a scoring model reads
+    * about its term, and a topic is one filtered scan of its own terms'
+    * rows: no doc-length table, no collection aggregate, no join. This
+    * is the SELECTIVE-query scale path the doc-vector layout can't
+    * offer: because the postings file is term-sorted, the literal
+    * `term IN (...)` predicate prunes parquet row groups at the scan
+    * (`PushedFilters`, asserted in IndexSpec) — the Spark analog of an
+    * HBase point-Get per term (SURVEY §3.3), without the RPC.
+    *
+    * This builds the relation from a (doc_id, term, tf, dl) frame
+    * ([[withDocLen]]) minus the collection columns, which
+    * [[writeInverted]] attaches.
     *
     * maxPostings=0: one row per term (the compact default). >0: split
     * each term's postings into doc_id-ordered SHARDS of at most
@@ -73,17 +86,14 @@ object Index {
     * layout's own design point. Per-group state stays bounded: each
     * (term, shard) collect_list buffer — which cannot spill
     * mid-group — holds ≤ maxPostings structs. Every shard row carries
-    * the TERM-level df/cf, so [[scoreFromInverted]] reads both
-    * layouts unchanged (explode unions shards; stats are constant per
-    * term — equivalence asserted in IndexSpec, plan shape in
-    * PlanShapeSpec). Re-measured r18 at 2.5M docs (IndexScaleProbe,
-    * probes/index_scale500_r18.log): see BENCH_NOTES §3g addendum.
+    * the same term- and collection-level stats, so [[scoreFromInverted]]
+    * reads both layouts unchanged (explode unions shards — equivalence
+    * asserted in IndexSpec, plan shape in PlanShapeSpec). Re-measured
+    * r18 at 2.5M docs (IndexScaleProbe, probes/index_scale500_r18.log):
+    * see BENCH_NOTES §3g addendum. `IxSlices`, the slices per term in
+    * the sharded build, is fixed (NOT a partition count) so the slice
+    * id is a stable function of doc_id.
     */
-  /** Slices per term in the sharded postings build — fixed (NOT a
-    * partition count) so the slice id is a stable function of doc_id.
-    */
-  private val IxSlices = 4096L
-
   private[graft] def postingsFrame(tf: DataFrame,
                                    maxPostings: Int): DataFrame =
     if (maxPostings > 0) {
@@ -139,16 +149,23 @@ object Index {
           s"CAST((_ix_lrk + _ix_off - 1) div CAST($maxPostings AS BIGINT)" +
             " AS INT)"))
         .groupBy("term", "shard", "df", "cf")
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("tf"))))
-          .as("postings"))
+        .agg(sort_array(collect_list(posting)).as("postings"))
         .select("term", "shard", "postings", "df", "cf")
     } else {
       tf.groupBy("term")
-        .agg(
-          sort_array(collect_list(struct(col("doc_id"), col("tf"))))
-            .as("postings"),
+        .agg(sort_array(collect_list(posting)).as("postings"),
           count(lit(1)).as("df"), sum("tf").as("cf"))
     }
+
+  private def posting = struct(col("doc_id"), col("tf"), col("dl"))
+
+  /** (doc_id, term, tf) → (doc_id, term, tf, dl), dl = Σ tf per doc —
+    * the scan path's doc length (`Retrieval.matchedTermsFromTf`), as a
+    * per-doc aggregate joined back: a window over doc_id would be a
+    * non-slice window over corpus rows in the sharded build.
+    */
+  private[graft] def withDocLen(tf: DataFrame): DataFrame =
+    tf.join(tf.groupBy("doc_id").agg(sum("tf").as("dl")), "doc_id")
 
   /** Default postings-row bound: the sharded layout measured BETTER on
     * build time, scoring time, AND peak memory at 2.5M docs
@@ -163,13 +180,16 @@ object Index {
 
   def writeInverted(docs: DataFrame, path: String, files: Int = 0,
                     maxPostings: Int = DefaultMaxPostings): Unit = {
-    // persist both stages: the range partitioner's boundary-sampling
-    // job, the postings shuffle write, and the doclen write are THREE
-    // actions over the same tokenize subtree — uncached, the corpus
-    // would be tokenized three times (the repo's no-repeated-tokenize
-    // rule applies across actions exactly like curateCorpus/spamFilter)
+    // persist both stages: the tokenize subtree feeds the postings,
+    // the doc lengths and the collection stats, and the postings feed
+    // TWO actions (the range partitioner's boundary-sampling job and
+    // the write) — uncached, the corpus would be tokenized once per
+    // consumer and action (the repo's no-repeated-tokenize rule applies
+    // across actions exactly like curateCorpus/spamFilter)
     val tf = TextOps.termFreqs(docs).persist()
-    val agged = postingsFrame(tf, maxPostings).persist()
+    val agged = postingsFrame(withDocLen(tf), maxPostings)
+      .crossJoin(broadcast(Retrieval.collectionStats(tf)))
+      .persist()
     // Term-sorted row groups WITHOUT a single-task funnel: range
     // partitioning keeps global term order across files (file k's
     // terms all precede file k+1's), sortWithinPartitions orders
@@ -186,40 +206,52 @@ object Index {
         if (maxPostings > 0) Seq("term", "shard") else Seq("term")
       ranged.sortWithinPartitions(sortCols.map(col): _*)
         .write.mode("overwrite").parquet(s"$path/postings")
-      tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/doclen")
     } finally { agged.unpersist(); tf.unpersist(); () }
   }
 
-  /** Retrieval from the inverted layout. The query-term set is driver
-    * material (topics files are tiny) — inlining it as a LITERAL IN
-    * predicate is what lets the parquet reader prune; a join could not
-    * push down. Everything else streams: no per-term RPC, one explode
-    * of exactly the matched postings.
+  /** Retrieval from the inverted layout: ONE filtered scan of the
+    * topic's own postings rows, which carry every scoring stat. The
+    * query set is driver material (topics files are tiny): its rows
+    * are collected once and become LITERALS — the `term IN (...)`
+    * predicate, which lets the parquet reader prune (a join could not
+    * push down), and a term → (query row, qlen) map each postings row
+    * explodes against. No query-side frame is joined, broadcast or
+    * shuffled; the only exchanges are the scorer's group and top-k.
     */
   def scoreFromInverted(spark: SparkSession, path: String, q: DataFrame,
                         partExpr: String, finalExpr: String,
                         conjunctive: Boolean, k: Int): DataFrame = {
-    val terms = q.select("term").distinct().collect().map(_.getString(0)).toSeq
     val post = spark.read.parquet(s"$path/postings")
-      .filter(col("term").isin(terms: _*))
-    val tf = post
-      .select(col("term"), col("df"), col("cf"),
-        explode(col("postings")).as("p"))
-      .select(col("term"), col("df"), col("cf"),
-        col("p.doc_id").as("doc_id"), col("p.tf").as("tf"))
-    val dl = spark.read.parquet(s"$path/doclen")
-    val qlen = Retrieval.qlenOf(q) // one definition, review r19
-    val cs = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_tokens"))
+    require(Try(post.select("postings.dl", "n_docs", "n_tokens")).isSuccess,
+      s"$path/postings lacks the dl/n_docs/n_tokens scoring stats (an " +
+        "index written before they moved onto the postings rows); " +
+        "rebuild it with Index.writeInverted")
+    val qRows = q.collect().toSeq
+    val qlen = Retrieval.qlenOf(qRows.map(_.getAs[Any]("qid")))
+    val byTerm = qRows.filter(_.getAs[String]("term") != null)
+      .groupBy(_.getAs[String]("term"))
+    // term → array<struct<q's other columns..., qlen>>, one element per
+    // query row (a repeated term matches once per repetition, as a
+    // join would); the cast names the fields and types the empty map
+    val qCols = q.schema.fields.filter(_.name != "term")
+    val qOf = map(byTerm.toSeq.flatMap { case (t, rs) =>
+      Seq(lit(t), array(rs.map(r => struct(qCols.map(f =>
+        lit(r.getAs[Any](f.name))) :+ lit(qlen(r.getAs[Any]("qid"))): _*)): _*))
+    }: _*).cast(MapType(StringType, ArrayType(StructType(
+      qCols :+ StructField("qlen", LongType)))))
+    val stats = Seq("df", "cf", "n_docs", "n_tokens").map(col)
+    // the query rows explode first, against the few postings ROWS, so
+    // the matched stream is produced by the one postings explode
+    val matched = post
+      .filter(col("term").isin(byTerm.keys.toSeq: _*))
+      .select(stats ++ Seq(col("postings"),
+        explode(element_at(qOf, col("term"))).as("q")): _*)
+      .select(col("q.*") +: stats :+ explode(col("postings")).as("p"): _*)
+      .select(col("*"), col("p.*")).drop("p")
     // part -> gate -> rank is Retrieval.scoreMatched VERBATIM (review
     // r14: this block was copy-pasted four times across the scorers —
     // one definition, so a gating/tie-break change can never drift)
-    Retrieval.scoreMatched(
-      tf.join(broadcast(q), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .join(broadcast(qlen), Seq("qid"))
-        .crossJoin(broadcast(cs)),
-      partExpr, finalExpr, conjunctive, k)
+    Retrieval.scoreMatched(matched, partExpr, finalExpr, conjunctive, k)
   }
 
   /** Retrieval from the materialized index — identical semantics to

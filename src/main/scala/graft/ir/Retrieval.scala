@@ -153,10 +153,7 @@ object Retrieval {
     // the sequential-scan path is reference parity, not deployment.
     val qlen = qlenOf(q)
     val tstats = tstatsFor(tf, q)
-    // n_docs = docs with ≥1 token, n_tokens = Σ tf (long sums:
-    // order-independent, exact)
-    val cs = tf.agg(countDistinct(col(idCol)).as("n_docs"),
-      sum("tf").as("n_tokens"))
+    val cs = collectionStats(tf, idCol)
     tf.withColumn("dl", expr(s"sum(tf) OVER (PARTITION BY $idCol)"))
       .join(broadcast(q), Seq("term"))
       .join(broadcast(tstats), Seq("term"))
@@ -164,14 +161,30 @@ object Retrieval {
       .crossJoin(broadcast(cs))
   }
 
-  /** ONE definition of the per-query term count (review r19: this
-    * one-liner existed verbatim here and in both Index scorers — a
-    * qlen-convention change, e.g. deduping repeated query terms,
-    * would have had to land in three places or the index and
-    * sequential-scan paths silently diverge on the conjunctive gate).
+  /** ONE definition of the per-query term count: rows per qid,
+    * repeated terms counted (review r19: this one-liner existed
+    * verbatim here and in both Index scorers — a qlen-convention
+    * change, e.g. deduping repeated query terms, would have had to land
+    * in three places or the index and sequential-scan paths silently
+    * diverge on the conjunctive gate). The overload below is the same
+    * count over query rows already on the driver
+    * ([[Index.scoreFromInverted]]); IndexSpec's repeated-term cases pin
+    * the two together.
     */
   private[graft] def qlenOf(q: DataFrame): DataFrame =
     q.groupBy("qid").agg(count(lit(1)).as("qlen"))
+
+  private[graft] def qlenOf(qids: Seq[Any]): Map[Any, Long] =
+    qids.groupBy(identity).map { case (qid, rows) => qid -> rows.size.toLong }
+
+  /** ONE definition of the collection stats, shared by the sequential
+    * scan and [[Index.writeInverted]] (which stores them on every
+    * postings row): n_docs = docs with ≥1 token, n_tokens = Σ tf
+    * (long sums: order-independent, exact).
+    */
+  private[graft] def collectionStats(tf: DataFrame,
+                                     idCol: String = "doc_id"): DataFrame =
+    tf.agg(countDistinct(col(idCol)).as("n_docs"), sum("tf").as("n_tokens"))
 
   /** ONE definition of the query-pruned per-term df/cf stats (same
     * r19 consolidation; shared by the sequential scan and

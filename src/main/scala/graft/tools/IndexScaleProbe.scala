@@ -179,7 +179,7 @@ object IndexScaleProbe {
       val d = new java.io.File(p)
       (if (d.isDirectory) d.listFiles.map(_.length).sum else 0L) >> 20
     }
-    println(s"""[idxscale] {"vocab_terms":${skew.getLong(0)},"max_df":${skew.getLong(1)},"p50_df":${skew.get(2)},"max_postings":${skew.getInt(3)},"postings_mb":${dirMb(s"$work/inv/postings")},"doclen_mb":${dirMb(s"$work/inv/doclen")}}""")
+    println(s"""[idxscale] {"vocab_terms":${skew.getLong(0)},"max_df":${skew.getLong(1)},"p50_df":${skew.get(2)},"max_postings":${skew.getInt(3)},"postings_mb":${dirMb(s"$work/inv/postings")}}""")
 
     val q = Retrieval.querySet
       .flatMap { case (qid, ts) => ts.map(qid -> _) }

@@ -203,7 +203,8 @@ class PlanShapeSpec extends SparkSpec {
     val (plan, pstr) = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val qe = graft.ir.Index.postingsFrame(
-        graft.text.TextOps.termFreqs(Tables(spark, sfTiny, "documents")),
+        graft.ir.Index.withDocLen(graft.text.TextOps.termFreqs(
+          Tables(spark, sfTiny, "documents"))),
         maxPostings = 16).queryExecution
       (qe.executedPlan, qe.executedPlan.toString)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
@@ -224,6 +225,35 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(bad.isEmpty,
       s"per-term window over corpus rows: ${bad.map(_.partitionSpec)}")
+  }
+
+  test("scoreFromInverted: a topic is ONE postings scan — no join, no " +
+    "broadcast, the term filter pushed") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.ir.{Index, Retrieval}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("invplan").toString
+    Index.writeInverted(Tables(spark, sfTiny, "documents"), dir, files = 4)
+    val q = Seq("51" -> "spark", "51" -> "join", "52" -> "spark")
+      .toDF("qid", "term")
+    val df = Index.scoreFromInverted(spark, dir, q,
+      Retrieval.bm25Part, Retrieval.bm25Final, conjunctive = false, 10)
+    assert(df.collect().nonEmpty)
+    val exec = df.queryExecution.executedPlan
+    object H extends AdaptiveSparkPlanHelper
+    val scans = H.collect(exec) { case s: FileSourceScanExec => s }
+    assert(scans.length == 1, s"one scan, of the postings:\n$exec")
+    assert(scans.head.relation.location.rootPaths.map(_.getName) ==
+      Seq("postings"), s"the scan must read the postings:\n$exec")
+    assert(scans.head.metadata("PushedFilters").contains("In(term"),
+      s"term IN (...) must reach the scan:\n$exec")
+    assert(H.collect(exec) { case j: BaseJoinExec => j }.isEmpty,
+      s"no join in the topic plan:\n$exec")
+    assert(H.collect(exec) { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"no broadcast in the topic plan:\n$exec")
   }
 
   test("px68/px69: no per-language window consumes un-aggregated corpus rows") {

@@ -109,6 +109,74 @@ class IndexSpec extends SparkSpec {
     assert(key(sharded) == key(direct) && key(sharded).nonEmpty)
   }
 
+  // Beyond disjunctive LM-Dirichlet: the models that read qlen (the
+  // conjunctive gate, cross-entropy) and n_docs/df (BM25), a repeated
+  // query term, a term absent from the index, and several topics per
+  // call — on the compact and the sharded layout alike.
+  for ((layout, maxP) <- Seq("compact" -> 0, "sharded" -> 16))
+    test(s"$layout inverted index: scoreFromInverted == scoreFor across " +
+      "models, repeated and unknown terms, two topics per call") {
+      import spark.implicits._
+      val dir = Files.createTempDirectory(s"inv-$layout").toString + "/idx"
+      val docs = Tables(spark, sfTiny, "documents")
+      Index.writeInverted(docs, dir, files = 4, maxPostings = maxP)
+      def topics(ts: (String, Seq[String])*) =
+        ts.flatMap { case (qid, terms) => terms.map(qid -> _) }
+          .toDF("qid", "term")
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getLong(1),
+          r.getDouble(2), r.getInt(3))).toSet
+      val lmno = (Retrieval.lmnoPart, Retrieval.lmnoFinal)
+      val bm25 = (Retrieval.bm25Part, Retrieval.bm25Final)
+      val lmdir = (Retrieval.lmdirPart, Retrieval.lmdirFinal)
+      val xent = (Retrieval.xentPart, Retrieval.xentFinal)
+      val cases = Seq(
+        ("conjunctive LM", topics("51" -> Seq("spark", "join")), lmno, true),
+        ("BM25", topics("52" -> Seq("window", "filter", "sort")), bm25, false),
+        ("repeated term, conjunctive",
+          topics("53" -> Seq("data", "merge", "data")), lmno, true),
+        ("repeated term, cross-entropy",
+          topics("53" -> Seq("data", "merge", "data")), xent, false),
+        ("two topics", topics("54" -> Seq("stream", "batch"),
+          "55" -> Seq("hash", "table", "scan")), bm25, false))
+      for ((name, q, (part, fin), conj) <- cases) {
+        val direct = key(Retrieval.scoreFor(docs, q, part, fin, conj, 10))
+        val inverted =
+          key(Index.scoreFromInverted(spark, dir, q, part, fin, conj, 10))
+        assert(direct.nonEmpty, s"$name: the case must rank something")
+        assert(inverted == direct, s"$name: index and scan rankings differ")
+        assert(inverted.map(_._1) == q.select("qid").as[String].collect().toSet,
+          s"$name: every topic of the call must be ranked")
+      }
+      val unknown = topics("56" -> Seq("qqqnotinthecorpus"))
+      assert(Index.scoreFromInverted(spark, dir, unknown,
+        lmdir._1, lmdir._2, conjunctive = false, 10).collect().isEmpty)
+      assert(Retrieval.scoreFor(docs, unknown,
+        lmdir._1, lmdir._2, conjunctive = false, 10).collect().isEmpty)
+    }
+
+  test("an inverted index without the scoring stats fails loudly, " +
+    "naming the path and the rebuild") {
+    import spark.implicits._
+    // the layout as written before dl/n_docs/n_tokens moved onto the
+    // postings rows: (term, postings: [(doc_id, tf)], df, cf) plus a
+    // doclen side table
+    val dir = Files.createTempDirectory("invold").toString + "/idx"
+    Seq(("spark", Seq((1L, 2L), (2L, 1L)), 2L, 3L))
+      .toDF("term", "postings", "df", "cf")
+      .selectExpr("term", "transform(postings, p -> named_struct(" +
+        "'doc_id', p._1, 'tf', p._2)) AS postings", "df", "cf")
+      .write.parquet(s"$dir/postings")
+    Seq((1L, 5L), (2L, 4L)).toDF("doc_id", "dl").write.parquet(s"$dir/doclen")
+    val q = Seq("51" -> "spark").toDF("qid", "term")
+    val e = intercept[IllegalArgumentException](Index.scoreFromInverted(
+      spark, dir, q, Retrieval.lmdirPart, Retrieval.lmdirFinal,
+      conjunctive = false, 10))
+    assert(e.getMessage.contains(s"$dir/postings"), e.getMessage)
+    assert(e.getMessage.contains("rebuild it with Index.writeInverted"),
+      e.getMessage)
+  }
+
   test("index term stats match direct stats") {
     val dir = Files.createTempDirectory("dv2").toString + "/idx"
     val docs = Tables(spark, sfTiny, "documents")
